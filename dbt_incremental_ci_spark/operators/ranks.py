@@ -131,6 +131,16 @@ def exact_quantiles(
     differently on extreme magnitudes; hypothesis-found). Output:
     ``(q, n, quantile)`` — quantile UNROUNDED (callers round to
     their grid).
+
+    Eager contract: building the DataFrame runs Spark jobs. Two
+    driver-bound actions execute before this function returns — the
+    one-row bounds/count aggregate and the per-bucket count totals —
+    plus a third one-row bounds read when the 1-in-20 hash sample of a
+    tiny input is empty. Each may launch several jobs (one per shuffle
+    stage under AQE). Only the final window and fold run when the
+    result is acted on. Callers that only build plans (``explain``,
+    plan audits) pay these jobs too, and input errors surface here, not
+    at execution. ``qs=[]`` runs nothing.
     """
     if not qs:
         # round-11 ADVICE: the wide 1-row aggregate below is built with

@@ -118,6 +118,12 @@ def brute_force_topk(
     ``max_pairs=None`` to explicitly accept the quadratic. The check
     costs two count jobs (parquet counts are metadata-only; negligible
     next to the cross product it guards).
+
+    Eager contract: with ``max_pairs`` set, those two counts
+    (``emb.count()``, ``queries.count()``) run while the DataFrame is
+    being built, before this function returns, so plan-only callers
+    pay them and an oversized input raises here. ``max_pairs=None``
+    keeps the function fully lazy.
     """
     from dbt_incremental_ci_spark.operators.scaling import ensure_min_parallelism
 

@@ -1,50 +1,35 @@
-"""Recursive-query support: native ``WITH RECURSIVE`` (Spark 4+) with
-an iterative fixpoint loop as the portable fallback.
+"""Recursive-query support (SURVEY §2.8 R1; the reference's one site
+is the course-prerequisite chain walk,
+int_course_prerequisite_chains.sql:3-36, depth-capped at 10). Both
+helpers compute ``WITH RECURSIVE … UNION ALL`` semantics.
 
-Spark 4.0 added recursive CTEs to the SQL dialect; on such sessions
-:func:`supports_recursive_cte` probes once and SQL-text recursion runs
-natively (single query, loop unrolled inside the engine — no per-step
-driver round trips). For DataFrame-built step functions (the edu
-prerequisite chains) and for Spark ≤3.5, the substitute is a
-driver-side loop over a *frontier* DataFrame (SURVEY §2.8 R1; the
-reference's one site is the course-prerequisite chain walk,
-int_course_prerequisite_chains.sql:3-36, depth-capped at 10):
+At this scale a recursion costs Spark jobs, not data. Spark 4.1's
+native ``WITH RECURSIVE`` runs every recursion level as jobs of its
+own: q24 (binary tree over ``part``, cap 10, sf0.01) took 53 jobs per
+call through it (51 executing the plan) and 40 through
+:func:`recursive_loop`. :func:`hierarchy_walk` runs it in 9: 3 for its
+single-parent gate, 6 executing the plan.
 
-    seed → step(frontier) → union — until the frontier is empty or the
-    depth cap hits.
-
-Each frontier is ``localCheckpoint``-ed: this truncates the lineage so
-the plan doesn't grow exponentially with depth, and materializes the
-(small) frontier for the emptiness probe. At 100 TB the frontiers of a
-hierarchy walk are tiny relative to the fact tables — the pattern
-scales because each step is one distributed join, not a collect.
+- :func:`recursive_loop` — a driver-side loop over a *frontier*
+  DataFrame: seed → step(frontier) → union, until the frontier is empty
+  or the depth cap hits. Each level is one distributed join, never a
+  collect; every few levels the frontier is ``localCheckpoint``-ed,
+  which truncates the lineage and materializes the (small) frontier for
+  the emptiness probe. Works for any step function, including
+  multi-parent graphs such as the edu prerequisite chains.
+- :func:`hierarchy_walk` — when each node has at most one parent, its
+  upward chain is unique, so its first ``cap`` ancestors come from
+  pointer jumping / path doubling (Valduriez & Boral 1986): ⌈log2 cap⌉
+  self-joins of ancestor arrays inside one lazy plan. Multi-parent
+  inputs fall back to the loop.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-
-_NATIVE_RECURSION: bool | None = None
-
-
-def supports_recursive_cte(spark: SparkSession) -> bool:
-    """One-time probe for native ``WITH RECURSIVE`` (Spark 4+). A
-    feature probe, not a version sniff — forks/backports stay honest."""
-    global _NATIVE_RECURSION
-    if _NATIVE_RECURSION is None:
-        try:
-            spark.sql(
-                "WITH RECURSIVE __probe(n) AS ("
-                "SELECT 1 UNION ALL SELECT n + 1 FROM __probe WHERE n < 2"
-                ") SELECT count(*) FROM __probe"
-            # driver-bound: 1 scalar row — WITH RECURSIVE capability probe, data-free
-            ).collect()
-            _NATIVE_RECURSION = True
-        except Exception:
-            _NATIVE_RECURSION = False
-    return _NATIVE_RECURSION
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def recursive_loop(
@@ -66,8 +51,6 @@ def recursive_loop(
     exhaustion only at checkpoint boundaries (steps on an empty
     frontier are empty — semantics unchanged).
     """
-    from pyspark.sql import functions as F
-
     frontier = seed.localCheckpoint(eager=True)
     acc = frontier
     depth = 0
@@ -82,3 +65,107 @@ def recursive_loop(
         if frontier.isEmpty():
             break
     return acc
+
+
+_BCAST_CAP = 4_000_000  # ancestor-array entries (bigint) ≈ 32 MB
+
+
+def hierarchy_walk(edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
+    """Every chain hanging below a seed, up to ``max_depth`` steps:
+
+        WITH RECURSIVE chain AS (
+          SELECT node, 0 AS depth, CAST(node AS STRING) AS path FROM seeds
+          UNION ALL
+          SELECT e.node, c.depth + 1, c.path || '->' || CAST(e.node AS STRING)
+          FROM edges e JOIN chain c ON e.parent = c.node
+          WHERE c.depth < max_depth)
+        SELECT node, depth, path FROM chain
+
+    ``edges`` has columns ``node`` and ``parent``; ``seeds`` has
+    ``node``. The output is ``(node, depth int, path string)`` with the
+    CTE's UNION ALL multiplicities.
+
+    Eager contract: one aggregate over ``edges`` (rows per node: the
+    most, the null keys, the total) runs while the DataFrame is built,
+    three Spark jobs. When no key repeats or is null, each node has at
+    most one parent and the result is one lazy plan: every edge node's
+    ancestor array is doubled ⌈log2 max_depth⌉ times (``anc[k-1]`` is
+    its k-th ancestor), and ``(v, k)`` is a row for each seed row equal
+    to ``anc[k-1]``. So cycles, several seeds on one chain and repeated
+    seeds come out exactly as the CTE gives them. Otherwise (a node
+    with two parents, or a null key, whose path the CTE makes NULL) it
+    falls back to :func:`recursive_loop`, which runs jobs of its own.
+    """
+    seed_rows = seeds.select(
+        "node",
+        F.lit(0).cast("int").alias("depth"),
+        F.col("node").cast("string").alias("path"),
+    )
+    gate = (
+        edges.groupBy("node")
+        .count()
+        .agg(
+            F.max("count").alias("most"),
+            F.sum(F.col("node").isNull().cast("int")).alias("nulls"),
+            F.sum("count").alias("rows"),
+        )
+        # driver-bound: 1 row — the single-parent gate and the edge count
+        .first()
+    )
+    if (gate["most"] or 0) > 1 or gate["nulls"]:
+        return _walk_levels(edges, seed_rows, max_depth)
+    # Each round broadcasts the whole ancestor table (≤ max_depth bigint
+    # entries per node). Past the cap the hint is withheld and Spark
+    # picks the join from its own size estimates.
+    fits = (gate["rows"] or 0) * max(max_depth, 1) <= _BCAST_CAP
+    anc = edges.select("node", F.array("parent").alias("anc"))
+    span = 1
+    while span < max_depth:
+        more = anc.select(F.col("node").alias("via"), F.col("anc").alias("more"))
+        # anc has exactly `span` entries unless its chain ended (the
+        # last entry has no parent, so the lookup misses)
+        anc = anc.join(
+            F.broadcast(more) if fits else more,
+            F.element_at("anc", -1) == F.col("via"),
+            "left",
+        ).select(
+            "node",
+            F.when(F.col("via").isNull(), F.col("anc"))
+            .otherwise(F.concat("anc", "more"))
+            .alias("anc"),
+        )
+        span *= 2
+    hits = anc.select(
+        "node",
+        "anc",
+        F.posexplode(F.slice("anc", 1, max_depth)).alias("pos", "seed"),
+    ).join(seeds.select(F.col("node").alias("seed")), "seed")
+    depth = F.col("pos") + 1
+    path = F.array_join(
+        F.reverse(
+            F.slice(F.concat(F.array("node"), "anc"), 1, depth + 1).cast("array<string>")
+        ),
+        "->",
+    )
+    return seed_rows.unionByName(
+        hits.select("node", depth.cast("int").alias("depth"), path.alias("path"))
+    )
+
+
+def _walk_levels(edges: DataFrame, seed_rows: DataFrame, max_depth: int) -> DataFrame:
+    """:func:`hierarchy_walk` one level at a time (any edge relation)."""
+    steps = edges.select(
+        "node", F.col("node").cast("string").alias("name"), "parent"
+    )
+
+    def step(frontier: DataFrame, depth: int) -> DataFrame:
+        return steps.join(
+            frontier.select(F.col("node").alias("parent"), F.col("path").alias("up")),
+            "parent",
+        ).select(
+            "node",
+            F.lit(depth).cast("int").alias("depth"),
+            F.concat("up", F.lit("->"), "name").alias("path"),
+        )
+
+    return recursive_loop(seed_rows, step, max_iterations=max_depth)

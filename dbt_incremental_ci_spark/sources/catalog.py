@@ -10,8 +10,11 @@ free — check with ``.explain``: ``PushedFilters``/``ReadSchema``.
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -29,8 +32,78 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session confs that change what Parquet schema inference returns
+# (``events_table`` flips the first one mid-session).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_MAX_SCHEMAS = 256
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, minus the schema-inference job on
+    repeat reads of one local file (absolute path).
+
+    Inference runs one Spark job per read (~70 ms in local mode), which
+    an ad-hoc query pays for every table it scans while its plan is
+    built. The inferred schema of a single local Parquet file is cached
+    under the file's identity and version (absolute path, inode, size,
+    ``st_mtime_ns``), the session (application id) and the session
+    confs that change inference; a hit reads with that schema. A
+    rewrite of the file changes its inode, size or mtime, so the next
+    read infers again (an in-place rewrite to the same size within one
+    file-system timestamp tick would not). Directories and paths on
+    another file system always infer."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    # a private copy: df.schema is handed to callers, who may mutate it
+    schema = StructType.fromJson(df.schema.jsonValue())
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _MAX_SCHEMAS:
+            del _SCHEMAS[next(iter(_SCHEMAS))]
+        _SCHEMAS[key] = schema
+    return df
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Cache key of a single local file, or None when *path* is not one.
+    Relative paths are left alone: the JVM resolves them against its own
+    working directory, which need not be this process's."""
+    if not os.path.isabs(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    if not (default_fs or "file:").startswith("file:"):
+        return None
+    return (
+        path,
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.app.id"),
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(

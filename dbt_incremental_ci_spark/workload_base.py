@@ -17,7 +17,6 @@ Determinism rules (so Spark and DuckDB hash-match bit-for-bit):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,10 +31,7 @@ from dbt_incremental_ci_spark.operators import (
     skew,
     text,
 )
-from dbt_incremental_ci_spark.plans.recursion import (
-    recursive_loop,
-    supports_recursive_cte,
-)
+from dbt_incremental_ci_spark.sources.catalog import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -65,7 +61,7 @@ def q(name: str, oracle: str | None = None):
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return load_table(spark, name, sf_dir)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -23,10 +23,6 @@ from dbt_incremental_ci_spark.operators import (
     skew,
     text,
 )
-from dbt_incremental_ci_spark.plans.recursion import (
-    recursive_loop,
-    supports_recursive_cte,
-)
 from dbt_incremental_ci_spark.workload_base import (
     _LAZY_ORACLES,
     ORACLES,

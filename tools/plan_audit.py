@@ -171,7 +171,7 @@ ONE_PART_NOTES = {
     "q144_markov_transitions": "state-pair matrix: O(|states|^2) rows",
     "q96_keyset_pagination": "TakeOrderedAndProject merges page_size rows/partition",
     "q94_pagination": "TakeOrderedAndProject merges page-sized rows",
-    "q24_recursive_hierarchy": "depth-bounded loop; per-level frames are hierarchy-sized",
+    "q24_recursive_hierarchy": "log-depth ancestor doubling (recursion.hierarchy_walk): 4 broadcast self-joins of hierarchy-sized ancestor arrays",
     "q146_bfs_levels": "frontier-sized level frames; union'd result",
     "q06_global_kpis": "global KPI agg: 1-row reduce",
     "q11_monthly_trend": "lag over per-month aggregates: O(#months) frame",
