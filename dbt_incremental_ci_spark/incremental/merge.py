@@ -13,23 +13,38 @@ Reproduces the reference's incremental semantics (SURVEY §2.11, §3.3):
 
 Physical strategy (plain Parquet tables — no Delta in this
 environment, and the same logic maps 1:1 onto Delta/Iceberg MERGE on a
-real lakehouse):
+real lakehouse). Every merge writes its result once:
 
 - **Partitioned targets** → *partition-scoped* merge: only partitions
-  containing new keys are rewritten, via dynamic partition overwrite.
-  At 100 TB this is the only viable plan — a day-partitioned fact table
-  merging one day of late data rewrites one partition, not the table.
-- **Unpartitioned targets** → two-phase rewrite through a staging
-  table (Spark cannot overwrite a path it is reading), acceptable for
-  small/medium tables; large tables should declare ``partition_by``.
+  that receive new keys or hold stale rows of moved keys are rewritten,
+  by one ``insertInto`` straight into the target with dynamic partition
+  overwrite. At 100 TB this is the only viable plan — a day-partitioned
+  fact table merging one day of late data rewrites one partition, not
+  the table. The partition columns come from the catalog, so a copy
+  that lost its partitioning takes the unpartitioned path instead of a
+  static full overwrite. The dynamic mode is a table property, never
+  the session conf. Partitions the merge empties (every row moved to
+  another partition) are the rewrite set minus the partitions observed
+  on the write job; they are dropped from the catalog.
+- **Unpartitioned targets** → :func:`replace_table`: one write into a
+  fresh version directory, then a metastore pointer flip.
+- **Widened schemas** → ``ALTER TABLE … ADD COLUMNS`` (old files read
+  the new columns as null), then the normal path.
 """
 
 from __future__ import annotations
 
+import re
+import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# A table's version directories, written by replace_table under the
+# table's own directory; the leading underscore hides them from Spark's
+# file listing of that directory.
+_VERSION_DIR = re.compile(r"_v[0-9a-f]{32}")
 
 
 def read_watermark(
@@ -56,27 +71,6 @@ def watermark_filter(
     return src.filter(F.col(col) > F.lit(watermark) if strict else F.col(col) >= F.lit(watermark))
 
 
-def _align_schemas(
-    spark: SparkSession, target: DataFrame, new_df: DataFrame, on_schema_change: str
-) -> tuple[DataFrame, DataFrame]:
-    """Column alignment for the union. append_new_columns: target gains
-    null-typed versions of new columns; new rows gain nulls for dropped
-    ones. ignore: new rows projected onto the target schema."""
-    tcols = {f.name: f.dataType for f in target.schema.fields}
-    ncols = {f.name: f.dataType for f in new_df.schema.fields}
-    if on_schema_change == "append_new_columns":
-        out_cols = list(tcols) + [c for c in ncols if c not in tcols]
-    else:
-        out_cols = list(tcols)
-    t_sel = [
-        F.col(c) if c in tcols else F.lit(None).cast(ncols[c]).alias(c) for c in out_cols
-    ]
-    n_sel = [
-        F.col(c) if c in ncols else F.lit(None).cast(tcols[c]).alias(c) for c in out_cols
-    ]
-    return target.select(*t_sel), new_df.select(*n_sel)
-
-
 def incremental_upsert(
     spark: SparkSession,
     qualified_table: str,
@@ -96,6 +90,9 @@ def incremental_upsert(
     others insert — dbt delete+insert ≡ MERGE WHEN MATCHED UPDATE /
     WHEN NOT MATCHED INSERT (SRC manifest config ``unique_key``,
     dbt_project.yml:231).
+
+    ``partition_by`` shapes only the first write; later merges take the
+    partition columns from the catalog.
     """
     if not spark.catalog.tableExists(qualified_table):
         writer = new_df.write.mode("overwrite").format("parquet")
@@ -105,76 +102,111 @@ def incremental_upsert(
         return "created"
 
     target = spark.table(qualified_table)
-    target, new_df = _align_schemas(spark, target, new_df, on_schema_change)
-    if on_schema_change == "append_new_columns" and [
-        f.name for f in target.schema.fields
-    ] != [f.name for f in spark.table(qualified_table).schema.fields]:
-        # Schema widened: fall back to a full two-phase rewrite so the
-        # table schema is updated atomically with the data.
-        partition_by = partition_by or None
-        merged = _merge_frames(target, new_df, unique_key)
-        _two_phase_overwrite(spark, qualified_table, merged, partition_by)
-        return "merged"
+    if on_schema_change == "append_new_columns":
+        added = [f for f in new_df.schema.fields if f.name not in target.columns]
+        if added:
+            cols = ", ".join(
+                "`{}` {}".format(f.name.replace("`", "``"), f.dataType.simpleString())
+                for f in added
+            )
+            spark.sql(f"ALTER TABLE {qualified_table} ADD COLUMNS ({cols})")
+            target = spark.table(qualified_table)
+    # New rows in the target's column order (insertInto matches by
+    # position; partition columns come last), null for columns they lack.
+    new_df = new_df.select(
+        *[
+            F.col(f.name) if f.name in new_df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in target.schema.fields
+        ]
+    )
 
     if unique_key is None:
         new_df.write.mode("append").format("parquet").insertInto(qualified_table)
         return "appended"
 
-    if partition_by:
-        # Partition-scoped merge: rewrite only partitions that receive
-        # new/changed keys (dynamic partition overwrite). dbt's
-        # delete+insert deletes by key TABLE-WIDE, so a key arriving
-        # under a different partition value (e.g. a corrected
-        # semester_id) must also evict its stale row from the partition
-        # it used to live in — include those partitions in the rewrite
-        # set via a semi-join of the target on the incoming keys.
-        all_parts, affected_target = merge_scope(target, new_df, unique_key, partition_by)
-        merged = _merge_frames(affected_target, new_df, unique_key)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # Stage through a checkpoint table to avoid read-overwrite overlap.
-            # insertInto matches positionally and saveAsTable moved the
-            # partition columns last — select the table's column order.
-            staged = _stage(spark, qualified_table, merged)
-            tcols = [f.name for f in spark.table(qualified_table).schema.fields]
-            staged.select(*tcols).write.mode("overwrite").insertInto(qualified_table)
-            # Dynamic overwrite only touches partitions present in the
-            # written data: a partition whose every row was a moved key
-            # ends up empty in `merged` and would silently keep its
-            # stale files — drop those partitions explicitly. The
-            # collect() is O(emptied partitions), NOT O(rows): bounded by
-            # the partition count of the affected slice (thousands is
-            # fine; a table with 10^5+ emptied partitions in one batch
-            # should batch the DROPs through the metastore API instead).
-            emptied = (
-                # driver-bound: O(#partitions) keys — moved-partition eviction list
-                all_parts.exceptAll(staged.select(*partition_by).distinct()).collect()
-            )
-            # One ALTER TABLE drops many partitions — batches of 500
-            # keep the statement size bounded and cut metastore round
-            # trips from O(partitions) to O(partitions/500).
-            for i in range(0, len(emptied), 500):
-                specs = ", ".join(
-                    "PARTITION ("
-                    + ", ".join(
-                        f"{c}={_partition_literal(row[c])}" for c in partition_by
-                    )
-                    + ")"
-                    for row in emptied[i : i + 500]
-                )
-                spark.sql(
-                    f"ALTER TABLE {qualified_table} DROP IF EXISTS {specs}"
-                )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        _drop_stage(spark, qualified_table)
-        spark.catalog.refreshTable(qualified_table)
+    part_cols = [c.name for c in spark.catalog.listColumns(qualified_table) if c.isPartition]
+    if not part_cols:
+        replace_table(spark, qualified_table, _merge_frames(target, new_df, unique_key))
         return "merged"
 
-    merged = _merge_frames(target, new_df, unique_key)
-    _two_phase_overwrite(spark, qualified_table, merged, None)
+    # Partition-scoped merge: rewrite only partitions that receive
+    # new/changed keys. dbt's delete+insert deletes by key TABLE-WIDE,
+    # so a key arriving under a different partition value (e.g. a
+    # corrected semester_id) must also evict its stale row from the
+    # partition it used to live in — merge_scope includes those
+    # partitions in the rewrite set.
+    all_parts, affected_target = merge_scope(target, new_df, unique_key, part_cols)
+    # driver-bound: O(#partitions) keys — the rewrite set, read before the write
+    scope = all_parts.collect()
+    written = Observation()
+    merged = _merge_frames(affected_target, new_df, unique_key).select(*target.columns)
+    # Spark stages a dynamic overwrite itself, so the write may read the
+    # table it replaces partitions of. The table property, unlike a
+    # writer option, is honoured by insertInto.
+    spark.sql(
+        f"ALTER TABLE {qualified_table} "
+        "SET SERDEPROPERTIES ('partitionOverwriteMode'='dynamic')"
+    )
+    observed = merged.observe(written, F.collect_set(F.struct(*part_cols)).alias("parts"))
+    observed.write.mode("overwrite").insertInto(qualified_table)
+    # Dynamic overwrite only touches partitions present in the written
+    # data: a partition whose every row was a moved key would silently
+    # keep its stale files — drop those partitions explicitly. The
+    # observed set is O(#partitions written), like the scope.
+    kept = {tuple(r) for r in written.get["parts"]}
+    emptied = [r for r in scope if tuple(r) not in kept]
+    # One ALTER TABLE drops many partitions — batches of 500 keep the
+    # statement size bounded and cut metastore round trips from
+    # O(partitions) to O(partitions/500).
+    for i in range(0, len(emptied), 500):
+        specs = ", ".join(
+            "PARTITION ("
+            + ", ".join(f"{c}={_partition_literal(v)}" for c, v in zip(part_cols, row))
+            + ")"
+            for row in emptied[i : i + 500]
+        )
+        spark.sql(f"ALTER TABLE {qualified_table} DROP IF EXISTS {specs}")
+    spark.catalog.refreshTable(qualified_table)
     return "merged"
+
+
+def replace_table(spark: SparkSession, qualified_table: str, df: DataFrame) -> None:
+    """Replace the rows of an unpartitioned Parquet table with ``df``,
+    creating the table if it does not exist. ``df`` may read the table.
+
+    One write into a fresh ``_v<id>`` directory under the table's
+    directory, then ``ALTER TABLE … SET LOCATION`` to it, then
+    everything else under the directory is deleted: superseded files go
+    at commit, as an overwrite deletes them, so a later ``DROP TABLE``
+    leaves the directory empty and the name can be re-created. A failure
+    before the flip leaves the previous version readable (the new
+    directory is hidden from its file listing); the next successful call
+    deletes the orphan. The table keeps its catalog schema, so ``df``
+    must have the table's columns and types.
+
+    A partitioned table is refused: a table-level ``SET LOCATION`` does
+    not move its partitions.
+    """
+    if not spark.catalog.tableExists(qualified_table):
+        df.write.format("parquet").saveAsTable(qualified_table)
+        return
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(qualified_table)
+    meta = state.catalog().getTableMetadata(ident)
+    if not meta.partitionColumnNames().isEmpty():
+        raise ValueError(f"replace_table: {qualified_table} is partitioned")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(meta.location())
+    if _VERSION_DIR.fullmatch(root.getName()):
+        root = root.getParent()
+    version = Path(root, "_v" + uuid.uuid4().hex)
+    df.write.parquet(version.toString())
+    spark.sql(f"ALTER TABLE {qualified_table} SET LOCATION '{version.toString()}'")
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    for status in fs.listStatus(root):
+        if status.getPath().getName() != version.getName():
+            fs.delete(status.getPath(), True)
 
 
 def merge_scope(
@@ -211,9 +243,7 @@ def merge_scope(
     return all_parts, affected_target
 
 
-def _merge_frames(target: DataFrame, new_df: DataFrame, unique_key: str | None) -> DataFrame:
-    if unique_key is None:
-        return target.unionByName(new_df)
+def _merge_frames(target: DataFrame, new_df: DataFrame, unique_key: str) -> DataFrame:
     # Late-arriving duplicates inside one batch: last write wins is not
     # defined without an ordering, so dedupe deterministically by key.
     deduped_new = new_df.dropDuplicates([unique_key])
@@ -232,34 +262,3 @@ def _partition_literal(value: Any) -> str:
     if isinstance(value, (int, float)):
         return str(value)
     return "'" + str(value).replace("'", "''") + "'"
-
-
-def _stage_name(qualified_table: str) -> str:
-    return qualified_table + "__stage"
-
-
-def _stage(spark: SparkSession, qualified_table: str, df: DataFrame) -> DataFrame:
-    stage = _stage_name(qualified_table)
-    df.write.mode("overwrite").format("parquet").saveAsTable(stage)
-    return spark.table(stage)
-
-
-def _drop_stage(spark: SparkSession, qualified_table: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {_stage_name(qualified_table)}")
-
-
-def _two_phase_overwrite(
-    spark: SparkSession,
-    qualified_table: str,
-    df: DataFrame,
-    partition_by: list[str] | None,
-) -> None:
-    staged = _stage(spark, qualified_table, df)
-    writer = staged.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(qualified_table)
-    _drop_stage(spark, qualified_table)
-    # Invalidate cached file listings — readers planned against the old
-    # files would otherwise hit FAILED_READ_FILE after the rewrite.
-    spark.catalog.refreshTable(qualified_table)

@@ -11,10 +11,11 @@ dbt's timestamp/check snapshot semantics on Spark:
   version *closed* (``dbt_valid_to = run_ts``) and a new open version
   inserted; vanished keys are closed; unchanged keys untouched.
 
-Physical strategy mirrors ``incremental_upsert``: the snapshot table is
-rewritten through a staged two-phase overwrite (Delta/Iceberg MERGE is
-the drop-in at lakehouse scale); only the *open* slice is compared, so
-the diff cost scales with current cardinality, not history length.
+Physical strategy mirrors ``incremental_upsert`` on an unpartitioned
+target: each pass writes the snapshot table once through
+:func:`~.merge.replace_table` (Delta/Iceberg MERGE is the drop-in at
+lakehouse scale); only the *open* slice is compared, so the diff cost
+scales with current cardinality, not history length.
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dbt_incremental_ci_spark.incremental.merge import replace_table
 
 META_COLS = ["dbt_scd_id", "dbt_valid_from", "dbt_valid_to"]
 
@@ -108,11 +111,5 @@ def snapshot(
         .unionByName(unchanged)
         .unionByName(to_open)
     )
-    stage = qualified_table + "__snapstage"
-    merged.write.mode("overwrite").format("parquet").saveAsTable(stage)
-    spark.table(stage).write.mode("overwrite").format("parquet").saveAsTable(
-        qualified_table
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    spark.catalog.refreshTable(qualified_table)
+    replace_table(spark, qualified_table, merged)
     return "updated"

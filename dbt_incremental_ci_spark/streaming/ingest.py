@@ -20,9 +20,10 @@ Per micro-batch:
 
 Scale: per-batch work is bounded by the batch — scd2_apply_log joins
 only the CURRENT slice of affected keys (history untouched), and the
-register table is m rows. Both tables go through the two-phase
-overwrite used by the batch merge layer (read-modify-write safety on
-parquet).
+register table is m rows. Both tables are rewritten with
+:func:`~..incremental.merge.replace_table`, as the batch merge layer
+rewrites an unpartitioned target: one write into a fresh version
+directory, then a pointer flip (read-modify-write safety on parquet).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from dbt_incremental_ci_spark.incremental.merge import _two_phase_overwrite
+from dbt_incremental_ci_spark.incremental.merge import replace_table
 from dbt_incremental_ci_spark.operators.hll import hll_merge, hll_registers
 from dbt_incremental_ci_spark.operators.scd import scd2_apply_log
 
@@ -90,7 +91,7 @@ def cdc_scd2_hll_stream(
             op_col=op_col,
             delete_op=delete_op,
         )
-        _two_phase_overwrite(spark, scd_table, next_scd, None)
+        replace_table(spark, scd_table, next_scd)
 
         # HLL: merge the batch's registers into the stored sketch.
         # Distinct keys EVER SEEN (deletes still count as observed) —
@@ -98,7 +99,7 @@ def cdc_scd2_hll_stream(
         regs_new = hll_registers(batch_df, key_col, m=hll_m, salt=hll_salt)
         if spark.catalog.tableExists(hll_table):
             regs_new = hll_merge(spark.table(hll_table), regs_new)
-        _two_phase_overwrite(spark, hll_table, regs_new, None)
+        replace_table(spark, hll_table, regs_new)
 
     writer = stream_df.writeStream.foreachBatch(apply_batch).outputMode(
         "update"
@@ -146,7 +147,7 @@ def minhash_register_stream(
                 spark.table(register_table).unionByName(regs_new),
                 set_col,
             )
-        _two_phase_overwrite(spark, register_table, regs_new, None)
+        replace_table(spark, register_table, regs_new)
 
     writer = stream_df.writeStream.foreachBatch(apply_batch).outputMode(
         "update"
@@ -195,7 +196,7 @@ def countmin_cell_stream(
                 .groupBy("r", "b")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        _two_phase_overwrite(spark, sketch_table, cells_new, None)
+        replace_table(spark, sketch_table, cells_new)
 
     writer = stream_df.writeStream.foreachBatch(apply_batch).outputMode(
         "update"

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from dbt_incremental_ci_spark.ci.copier import TableCopier, compute_target_schema
 from dbt_incremental_ci_spark.ci.core import SlimCI
 from dbt_incremental_ci_spark.ci.state import StateStore, diff_state, modified_plus
+from dbt_incremental_ci_spark.incremental.merge import incremental_upsert
 from dbt_incremental_ci_spark.plans.registry import ModelRegistry
 from dbt_incremental_ci_spark.plans.runner import Engine
 
@@ -110,6 +111,25 @@ def test_parallel_copy(spark, tmp_path):
     for i in range(3):
         assert spark.table(f"t_ci3.tab{i}").count() == 5
 
+
+
+def test_partition_scoped_merge_into_ci_copy_keeps_rows(spark):
+    """The copier's CTAS drops PARTITIONED BY, so the CI copy of a
+    partitioned table is unpartitioned. A merge into it that names the
+    prod partition columns must still replace keys table-wide and keep
+    every other row, not overwrite the copy with the affected slice."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS t_prod5")
+    spark.sql("DROP TABLE IF EXISTS t_prod5.part")
+    spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b"), (3, 2, "c"), (4, 3, "d")], "id int, p int, v string"
+    ).write.format("parquet").partitionBy("p").saveAsTable("t_prod5.part")
+    results = TableCopier(spark, "t_prod5", "t_ci5").copy_tables(["t_prod5.part"])
+    assert [r.status for r in results] == ["copied"]
+    # key 2 moves from p=1 to p=3; key 5 is new
+    batch = spark.createDataFrame([(2, 3, "b2"), (5, 1, "e")], "id int, p int, v string")
+    incremental_upsert(spark, "t_ci5.part", batch, unique_key="id", partition_by=["p"])
+    got = sorted(tuple(r) for r in spark.table("t_ci5.part").select("id", "p", "v").collect())
+    assert got == [(1, 1, "a"), (2, 3, "b2"), (3, 2, "c"), (4, 3, "d"), (5, 1, "e")]
 
 def test_slim_ci_copies_snapshots(spark, tmp_path):
     """Snapshots are the other pre-seedable resource type

@@ -2,15 +2,21 @@
 an incremental run over appended batches must equal a from-scratch full
 rebuild (SURVEY §5 'Incremental-specific test')."""
 
-from datetime import date
+import os
+from datetime import date, datetime
+from urllib.parse import urlparse
 
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from dbt_incremental_ci_spark.incremental.merge import (
     incremental_upsert,
     read_watermark,
+    replace_table,
     watermark_filter,
 )
+from dbt_incremental_ci_spark.incremental.snapshot import snapshot
 
 
 def rows(spark, table):
@@ -195,3 +201,111 @@ def test_large_key_batch_no_forced_broadcast(spark):
         assert out.filter((F.col("id") == 150_000) & (F.col("val") == "new")).count() == 1
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def _table_dir(spark, table):
+    schema, name = table.split(".")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    return os.path.join(warehouse, f"{schema}.db", name)
+
+
+def test_replace_table_survives_failed_flip(spark, monkeypatch):
+    """An exception between the data write and the SET LOCATION flip
+    leaves the old rows readable; a rerun converges to exactly one
+    version directory, and the name can be dropped and re-created."""
+    tgt = "t_inc.flip"
+    spark.sql("CREATE DATABASE IF NOT EXISTS t_inc")
+    spark.sql("DROP TABLE IF EXISTS " + tgt)
+    root = _table_dir(spark, tgt)
+    replace_table(spark, tgt, spark.createDataFrame([(1, "a")], "id int, val string"))
+
+    def vals():
+        return sorted(tuple(r) for r in spark.table(tgt).collect())
+
+    def bump():  # reads the table it replaces
+        return spark.table(tgt).withColumn("val", F.concat("val", F.lit("b")))
+
+    sql = spark.sql
+
+    def failing_sql(statement, *args, **kwargs):
+        if "SET LOCATION" in statement:
+            raise RuntimeError("injected before the flip")
+        return sql(statement, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", failing_sql)
+    with pytest.raises(RuntimeError, match="injected"):
+        replace_table(spark, tgt, bump())
+    monkeypatch.undo()
+    assert vals() == [(1, "a")]
+
+    replace_table(spark, tgt, bump())
+    replace_table(spark, tgt, bump())
+    assert vals() == [(1, "abb")]
+    left = os.listdir(root)
+    assert len(left) == 1 and left[0].startswith("_v"), left
+
+    spark.sql("DROP TABLE " + tgt)
+    spark.createDataFrame([(2, "c")], "id int, val string").write.format(
+        "parquet"
+    ).saveAsTable(tgt)
+    assert vals() == [(2, "c")]
+
+    spark.sql("DROP TABLE IF EXISTS t_inc.flip_part")
+    part = spark.createDataFrame([(1, 1)], "id int, p int")
+    part.write.format("parquet").partitionBy("p").saveAsTable("t_inc.flip_part")
+    with pytest.raises(ValueError, match="partitioned"):
+        replace_table(spark, "t_inc.flip_part", part)
+
+
+def test_merge_leaves_session_alone(spark, monkeypatch):
+    """Dynamic overwrite comes from the table, not the session: with the
+    session conf at static, a partitioned merge still rewrites only the
+    affected partitions and leaves the conf as it was. No merge or
+    snapshot ever creates a stage table."""
+    saved = []
+    save_as_table = DataFrameWriter.saveAsTable
+
+    def spy(self, name, *args, **kwargs):
+        saved.append(name)
+        return save_as_table(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", spy)
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(conf, "static")
+    try:
+        spark.sql("CREATE DATABASE IF NOT EXISTS t_inc")
+        tgt = "t_inc.session"
+        spark.sql("DROP TABLE IF EXISTS " + tgt)
+        b1 = spark.createDataFrame(
+            [(1, "2024-01", "a"), (2, "2024-02", "b"), (3, "2024-03", "c")],
+            ["id", "month", "val"],
+        )
+        incremental_upsert(spark, tgt, b1, unique_key="id", partition_by=["month"])
+        untouched = os.path.join(_table_dir(spark, tgt), "month=2024-03")
+        files_before = sorted(os.listdir(untouched))
+        b2 = spark.createDataFrame(
+            [(1, "2024-01", "a2"), (4, "2024-02", "d")], ["id", "month", "val"]
+        )
+        incremental_upsert(spark, tgt, b2, unique_key="id", partition_by=["month"])
+        assert spark.conf.get(conf) == "static"
+        got = {r["id"]: (r["month"], r["val"]) for r in spark.table(tgt).collect()}
+        assert got == {
+            1: ("2024-01", "a2"),
+            2: ("2024-02", "b"),
+            3: ("2024-03", "c"),
+            4: ("2024-02", "d"),
+        }
+        assert sorted(os.listdir(untouched)) == files_before
+
+        spark.sql("DROP TABLE IF EXISTS t_inc.session_flat")
+        for batch in (b1, b2):
+            incremental_upsert(spark, "t_inc.session_flat", batch, unique_key="id")
+        spark.sql("DROP TABLE IF EXISTS t_inc.session_snap")
+        for ts, batch in ((datetime(2024, 1, 1), b1), (datetime(2024, 2, 1), b2)):
+            snapshot(spark, "t_inc.session_snap", batch, "id", run_ts=ts)
+        assert spark.conf.get(conf) == "static"
+    finally:
+        spark.conf.unset(conf)
+    stage = ("__stage", "__snapstage")
+    assert not [n for n in saved if n.endswith(stage)], saved
+    assert not [t.name for t in spark.catalog.listTables("t_inc") if t.name.endswith(stage)]

@@ -2,9 +2,10 @@
 incremental MERGE over arbitrary batch splits ≡ one full build.
 
 Kept deliberately small (Spark jobs per example are expensive): the
-generator drives key overlaps, in-batch duplicates, and arbitrary
-split points — exactly the surfaces where delete+insert vs MERGE
-semantics can diverge (SURVEY §7.6)."""
+generator drives key overlaps across batches, keys that move partition
+between batches, and partitioned vs unpartitioned targets — exactly the
+surfaces where delete+insert vs MERGE semantics can diverge
+(SURVEY §7.6)."""
 
 from datetime import date, timedelta
 
@@ -15,46 +16,54 @@ from dbt_incremental_ci_spark.incremental.merge import incremental_upsert
 ROW = st.tuples(
     st.integers(min_value=1, max_value=12),         # unique key (forced overlaps)
     st.integers(min_value=0, max_value=30),         # day offset (watermark col)
+    st.integers(min_value=0, max_value=2),          # partition: an overlapping key may move
     st.text(alphabet="abcde", min_size=1, max_size=3),
 )
 
 
+def _batch(min_size):
+    return st.lists(ROW, min_size=min_size, max_size=12, unique_by=lambda r: r[0])
+
+
 @settings(max_examples=8, deadline=None)
 @given(
-    rows=st.lists(ROW, min_size=1, max_size=20),
-    split=st.integers(min_value=0, max_value=20),
+    b1=_batch(1),
+    b2=_batch(0),
+    partition_by=st.sampled_from([None, ["p"]]),
 )
-def test_incremental_merge_equals_full_build(spark, rows, split):
+def test_incremental_merge_equals_full_build(spark, b1, b2, partition_by):
     spark.sql("CREATE DATABASE IF NOT EXISTS t_prop")
     base = date(2024, 1, 1)
-    data = [
-        (k, base + timedelta(days=d), v) for k, d, v in rows
-    ]
-    split = min(split, len(data))
-    b1, b2 = data[:split], data[split:]
 
     def mk(batch):
-        return spark.createDataFrame(batch or [(0, base, "z")],
-                                     "id int, d date, val string").filter(
-            "id > 0" if not batch else "1=1"
+        return spark.createDataFrame(
+            [(k, base + timedelta(days=d), p, v) for k, d, p, v in batch],
+            "id int, d date, p int, val string",
         )
 
+    def rows(table):
+        return sorted(
+            tuple(r) for r in spark.table(table).select("id", "d", "p", "val").collect()
+        )
+
+    # keys are unique within a batch; the later batch replaces a key
+    final = list(({r[0]: r for r in b1} | {r[0]: r for r in b2}).values())
+
     spark.sql("DROP TABLE IF EXISTS t_prop.inc")
-    if b1:
-        incremental_upsert(spark, "t_prop.inc", mk(b1), unique_key="id")
-    if b2:
-        incremental_upsert(spark, "t_prop.inc", mk(b2), unique_key="id")
+    for batch in (b1, b2):
+        if batch:
+            incremental_upsert(
+                spark, "t_prop.inc", mk(batch), unique_key="id", partition_by=partition_by
+            )
 
     spark.sql("DROP TABLE IF EXISTS t_prop.full")
-    incremental_upsert(spark, "t_prop.full", mk(data), unique_key="id")
+    incremental_upsert(
+        spark, "t_prop.full", mk(final), unique_key="id", partition_by=partition_by
+    )
 
-    inc = {r["id"] for r in spark.table("t_prop.inc").collect()}
-    full = {r["id"] for r in spark.table("t_prop.full").collect()}
-    # key sets must agree exactly (values may differ when a key repeats
-    # across the split: later batches replace — full-build dedup keeps
-    # the deterministic first occurrence; key coverage is the invariant
-    # the slim-CI pre-seeding relies on)
-    assert inc == full
+    expected = sorted((k, base + timedelta(days=d), p, v) for k, d, p, v in final)
+    assert rows("t_prop.full") == expected
+    assert rows("t_prop.inc") == expected
 
 
 @settings(max_examples=8, deadline=None)
