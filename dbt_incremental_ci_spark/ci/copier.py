@@ -83,21 +83,12 @@ class TableCopier:
         self.dry_run = dry_run
         self.dialect = dialect
 
-    def _statements(self, qualified_source: str) -> tuple[str, str, str]:
+    def _target(self, qualified_source: str) -> str:
         schema, table = qualified_source.split(".", 1)
-        target_schema = compute_target_schema(schema, self.base_schema, self.ci_schema)
-        target = f"{target_schema}.{table}"
-        # Parquet saveAsTable can't CREATE OR REPLACE in one statement on
-        # the default catalog — DROP + CTAS, like the reference's
-        # postgres/redshift/trino branch (SRC/copier.py:141-154).
-        return (
-            target,
-            f"DROP TABLE IF EXISTS {target}",
-            f"CREATE TABLE {target} AS SELECT * FROM {qualified_source}",
-        )
+        return f"{compute_target_schema(schema, self.base_schema, self.ci_schema)}.{table}"
 
     def copy_table(self, qualified_source: str) -> CopyResult:
-        target, drop_sql, ctas_sql = self._statements(qualified_source)
+        target = self._target(qualified_source)
         sql_text = render_copy_sql(qualified_source, target, self.dialect)
         if self.dry_run:
             return CopyResult(
@@ -109,8 +100,10 @@ class TableCopier:
             )
         try:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {target.split('.')[0]}")
-            self.spark.sql(drop_sql)
-            self.spark.sql(ctas_sql)
+            # Parquet tables can't CREATE OR REPLACE in one statement on
+            # the default catalog, so Spark takes the DROP + CTAS form.
+            for statement in render_copy_sql(qualified_source, target, "spark").split(";\n"):
+                self.spark.sql(statement)
             return CopyResult(qualified_source, target, "copied", sql=sql_text)
         except Exception as e:  # noqa: BLE001 — per-table status, like the reference
             return CopyResult(qualified_source, target, "error", error=str(e), sql=sql_text)

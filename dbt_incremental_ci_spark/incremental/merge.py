@@ -20,12 +20,15 @@ real lakehouse). Every merge writes its result once:
   by one ``insertInto`` straight into the target with dynamic partition
   overwrite. At 100 TB this is the only viable plan — a day-partitioned
   fact table merging one day of late data rewrites one partition, not
-  the table. The partition columns come from the catalog, so a copy
-  that lost its partitioning takes the unpartitioned path instead of a
-  static full overwrite. The dynamic mode is a table property, never
-  the session conf. Partitions the merge empties (every row moved to
-  another partition) are the rewrite set minus the partitions observed
-  on the write job; they are dropped from the catalog.
+  the table. The rewrite set is one O(#partitions) collect; the merge
+  then reads only those partitions, through one null-safe ``IN`` over
+  the partition columns that Spark prunes at file listing. The
+  partition columns come from the catalog, so a copy that lost its
+  partitioning takes the unpartitioned path instead of a static full
+  overwrite. The dynamic mode is a table property, never the session
+  conf. Partitions the merge empties (every row moved to another
+  partition) are the rewrite set minus the partitions observed on the
+  write job; they are dropped from the catalog.
 - **Unpartitioned targets** → :func:`replace_table`: one write into a
   fresh version directory, then a metastore pointer flip.
 - **Widened schemas** → ``ALTER TABLE … ADD COLUMNS`` (old files read
@@ -53,7 +56,7 @@ def read_watermark(
     """Scalar watermark: ``select max(col) from target`` — read as a
     literal *before* planning the main scan so the incremental filter
     can partition-prune (SURVEY §4 'scalar subquery' row)."""
-    if not spark.catalog.tableExists(qualified_table):
+    if _table_meta(spark, qualified_table) is None:
         return default
     # driver-bound: 1 scalar row — incremental watermark read
     row = spark.table(qualified_table).agg(F.max(col).alias("wm")).collect()[0]
@@ -76,7 +79,6 @@ def incremental_upsert(
     qualified_table: str,
     new_df: DataFrame,
     unique_key: str | None = None,
-    watermark_col: str | None = None,
     on_schema_change: str = "ignore",
     partition_by: list[str] | None = None,
 ) -> str:
@@ -94,7 +96,8 @@ def incremental_upsert(
     ``partition_by`` shapes only the first write; later merges take the
     partition columns from the catalog.
     """
-    if not spark.catalog.tableExists(qualified_table):
+    meta = _table_meta(spark, qualified_table)
+    if meta is None:
         writer = new_df.write.mode("overwrite").format("parquet")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -125,7 +128,8 @@ def incremental_upsert(
         new_df.write.mode("append").format("parquet").insertInto(qualified_table)
         return "appended"
 
-    part_cols = [c.name for c in spark.catalog.listColumns(qualified_table) if c.isPartition]
+    names = meta.partitionColumnNames()
+    part_cols = [names.apply(i) for i in range(names.length())]
     if not part_cols:
         replace_table(spark, qualified_table, _merge_frames(target, new_df, unique_key))
         return "merged"
@@ -134,13 +138,34 @@ def incremental_upsert(
     # new/changed keys. dbt's delete+insert deletes by key TABLE-WIDE,
     # so a key arriving under a different partition value (e.g. a
     # corrected semester_id) must also evict its stale row from the
-    # partition it used to live in — merge_scope includes those
-    # partitions in the rewrite set.
-    all_parts, affected_target = merge_scope(target, new_df, unique_key, part_cols)
+    # partition it used to live in — the rewrite set includes those
+    # partitions. No broadcast hint on the incoming keys: a backfill
+    # batch can carry a data-sized key set; AQE broadcasts it on its own
+    # when it is small, else this is a shuffled semi-join.
+    stale = target.join(new_df.select(unique_key), unique_key, "left_semi")
+    parts = new_df.select(*part_cols).unionByName(stale.select(*part_cols))
     # driver-bound: O(#partitions) keys — the rewrite set, read before the write
-    scope = all_parts.collect()
+    scope = parts.distinct().collect()
+    if not scope:
+        return "merged"
+    # The target restricted to the rewrite set by one IN over literal
+    # structs: null-safe (struct equality matches NULL fields, so the
+    # default partition is kept), prunable (partition columns only) and
+    # planned as one INSET however large the scope.
+    types = {f.name: f.dataType.simpleString() for f in target.schema.fields}
+    fields = ", ".join(f"'{c}', `{c}`" for c in part_cols)
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(
+            f"'{c}', CAST({_partition_literal(v, 'NULL')} AS {types[c]})"
+            for c, v in zip(part_cols, row)
+        )
+        + ")"
+        for row in scope
+    )
+    affected = target.filter(F.expr(f"named_struct({fields}) IN ({structs})"))
     written = Observation()
-    merged = _merge_frames(affected_target, new_df, unique_key).select(*target.columns)
+    merged = _merge_frames(affected, new_df, unique_key).select(*target.columns)
     # Spark stages a dynamic overwrite itself, so the write may read the
     # table it replaces partitions of. The table property, unlike a
     # writer option, is honoured by insertInto.
@@ -188,12 +213,10 @@ def replace_table(spark: SparkSession, qualified_table: str, df: DataFrame) -> N
     A partitioned table is refused: a table-level ``SET LOCATION`` does
     not move its partitions.
     """
-    if not spark.catalog.tableExists(qualified_table):
+    meta = _table_meta(spark, qualified_table)
+    if meta is None:
         df.write.format("parquet").saveAsTable(qualified_table)
         return
-    state = spark._jsparkSession.sessionState()
-    ident = state.sqlParser().parseTableIdentifier(qualified_table)
-    meta = state.catalog().getTableMetadata(ident)
     if not meta.partitionColumnNames().isEmpty():
         raise ValueError(f"replace_table: {qualified_table} is partitioned")
     Path = spark._jvm.org.apache.hadoop.fs.Path
@@ -209,56 +232,32 @@ def replace_table(spark: SparkSession, qualified_table: str, df: DataFrame) -> N
             fs.delete(status.getPath(), True)
 
 
-def merge_scope(
-    target: DataFrame,
-    new_df: DataFrame,
-    unique_key: str,
-    partition_by: list[str],
-) -> tuple[DataFrame, DataFrame]:
-    """The partition-scoped merge's rewrite set: ``(all_parts,
-    affected_target)`` where ``all_parts`` is every partition value the
-    merge must rewrite (partitions receiving new rows + partitions
-    holding stale rows of moved keys) and ``affected_target`` is the
-    target slice in those partitions.
-
-    No broadcast hint on the incoming key set: a backfill batch can
-    carry a data-sized number of distinct keys, and forcing a broadcast
-    of it would OOM the driver/executors at scale. AQE picks broadcast
-    on its own when the batch is genuinely small; otherwise this is a
-    shuffled left-semi join. ``all_parts`` itself IS hinted — it is
-    O(distinct partition values), a dimension-sized set by construction.
-    """
-    parts = new_df.select(*partition_by).distinct()
-    stale_parts = (
-        target.join(
-            new_df.select(unique_key).distinct(),
-            unique_key,
-            "left_semi",
-        )
-        .select(*partition_by)
-        .distinct()
-    )
-    all_parts = parts.unionByName(stale_parts).distinct()
-    affected_target = target.join(F.broadcast(all_parts), partition_by, "left_semi")
-    return all_parts, affected_target
+def _table_meta(spark: SparkSession, qualified_table: str) -> Any:
+    """The table's ``CatalogTable`` (partition columns, location), or
+    ``None`` if it does not exist: a session-catalog lookup that starts
+    no Spark job."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(qualified_table)
+    if not state.catalog().tableExists(ident):
+        return None
+    return state.catalog().getTableMetadata(ident)
 
 
 def _merge_frames(target: DataFrame, new_df: DataFrame, unique_key: str) -> DataFrame:
     # Late-arriving duplicates inside one batch: last write wins is not
     # defined without an ordering, so dedupe deterministically by key.
     deduped_new = new_df.dropDuplicates([unique_key])
-    survivors = target.join(
-        deduped_new.select(unique_key).distinct(), unique_key, "left_anti"
-    )
+    survivors = target.join(deduped_new.select(unique_key), unique_key, "left_anti")
     return survivors.unionByName(deduped_new)
 
 
-def _partition_literal(value: Any) -> str:
-    """SQL literal for a partition value in ALTER TABLE ... PARTITION."""
+def _partition_literal(value: Any, null: str = "'__HIVE_DEFAULT_PARTITION__'") -> str:
+    """SQL literal for a partition value: ``null`` (the Hive default
+    partition name, as ALTER TABLE ... PARTITION takes it) for None."""
     if value is None:
-        return "'__HIVE_DEFAULT_PARTITION__'"
+        return null
     if isinstance(value, bool):
         return "true" if value else "false"
     if isinstance(value, (int, float)):
         return str(value)
-    return "'" + str(value).replace("'", "''") + "'"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"

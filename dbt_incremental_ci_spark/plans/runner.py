@@ -160,7 +160,6 @@ class Engine:
                 qualified,
                 df,
                 unique_key=m.unique_key,
-                watermark_col=m.watermark_col,
                 on_schema_change=m.on_schema_change,
                 partition_by=m.partition_by or None,
             )

@@ -3,6 +3,7 @@ an incremental run over appended batches must equal a from-scratch full
 rebuild (SURVEY §5 'Incremental-specific test')."""
 
 import os
+import re
 from datetime import date, datetime
 from urllib.parse import urlparse
 
@@ -95,13 +96,14 @@ def test_partitioned_merge_rewrites_only_affected_partitions(spark):
     tgt = "t_inc.part"
     spark.sql("CREATE DATABASE IF NOT EXISTS t_inc")
     spark.sql("DROP TABLE IF EXISTS " + tgt)
+    odd = "it's a\\b"  # a partition value SQL literals must escape
     b1 = spark.createDataFrame(
-        [(1, "2024-01", "a"), (2, "2024-01", "b"), (3, "2024-02", "c")],
+        [(1, "2024-01", "a"), (2, "2024-01", "b"), (3, "2024-02", "c"), (5, odd, "e")],
         ["id", "month", "val"],
     )
     incremental_upsert(spark, tgt, b1, unique_key="id", partition_by=["month"])
     b2 = spark.createDataFrame(
-        [(3, "2024-02", "c2"), (4, "2024-02", "d")], ["id", "month", "val"]
+        [(3, "2024-02", "c2"), (4, "2024-02", "d"), (6, odd, "f")], ["id", "month", "val"]
     )
     incremental_upsert(spark, tgt, b2, unique_key="id", partition_by=["month"])
     got = {r["id"]: (r["month"], r["val"]) for r in spark.table(tgt).collect()}
@@ -110,6 +112,8 @@ def test_partitioned_merge_rewrites_only_affected_partitions(spark):
         2: ("2024-01", "b"),
         3: ("2024-02", "c2"),
         4: ("2024-02", "d"),
+        5: (odd, "e"),
+        6: (odd, "f"),
     }
 
 
@@ -154,51 +158,75 @@ def test_partitioned_merge_key_moves_partition(spark):
     assert months == {"2024-01", "2024-03"}
 
 
-def test_large_key_batch_no_forced_broadcast(spark):
+def test_large_key_batch_no_forced_broadcast(spark, monkeypatch):
     """A backfill batch with >=10^5 distinct keys goes through the
     partition-scoped path with NO BroadcastExchange in the executed
-    stale-partition plan when AQE declines to broadcast (threshold -1
+    rewrite-set plan when AQE declines to broadcast (threshold -1
     emulates a key set larger than executor memory allows) — the
     round-2 scale fix for the forced-broadcast OOM at merge.py's
-    moved-key semi-join."""
-    from dbt_incremental_ci_spark.incremental.merge import merge_scope
+    moved-key semi-join. The target read is pruned to the rewrite
+    set's partitions."""
+    from dbt_incremental_ci_spark.incremental import merge
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        # 20 partitions: keys below 100k spread over p = id % 20, the
+        # rest over p = id % 16, so partitions 16-19 hold no batch key
         target = spark.range(0, 200_000).select(
-            F.col("id"), (F.col("id") % 16).cast("int").alias("p"),
+            F.col("id"),
+            F.when(F.col("id") < 100_000, F.col("id") % 20)
+            .otherwise(F.col("id") % 16).cast("int").alias("p"),
             F.lit("old").alias("val"),
         )
-        # 120k distinct keys: 100k updates + 20k inserts; key 5 moves
-        # partitions would need a different p — keep p = id % 16 so the
-        # scope is partition-complete either way.
+        # 120k distinct keys: 100k updates + 20k inserts, none moving
+        # partition, so the rewrite set is exactly p = 0..15
         batch = spark.range(100_000, 220_000).select(
             F.col("id"), (F.col("id") % 16).cast("int").alias("p"),
             F.lit("new").alias("val"),
         )
-        all_parts, affected = merge_scope(target, batch, "id", ["p"])
-        # collect() (not count()) so the DataFrame's OWN QueryExecution
-        # runs — count() derives a separate plan and the adaptive plan
-        # here would never finalize
-        assert len(all_parts.collect()) == 16
-        plan = all_parts._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan, plan
-        assert "BroadcastExchange" not in plan, plan
-
-        # end-to-end: the full merge at this key count stays correct
         tgt = "t_inc.bigkeys"
         spark.sql("CREATE DATABASE IF NOT EXISTS t_inc")
         spark.sql("DROP TABLE IF EXISTS " + tgt)
         incremental_upsert(spark, tgt, target, unique_key="id", partition_by=["p"])
+        collected, restricted = [], []
+        collect, merge_frames = type(batch).collect, merge._merge_frames
+
+        def spy_collect(self):
+            collected.append(self)
+            return collect(self)
+
+        def spy_merge_frames(affected, *args):
+            restricted.append(affected)
+            return merge_frames(affected, *args)
+
+        monkeypatch.setattr(type(batch), "collect", spy_collect)
+        monkeypatch.setattr(merge, "_merge_frames", spy_merge_frames)
         assert (
             incremental_upsert(spark, tgt, batch, unique_key="id", partition_by=["p"])
             == "merged"
         )
+        monkeypatch.undo()
+
+        # the rewrite set is the merge's one collect; collect() runs the
+        # DataFrame's OWN QueryExecution, so its adaptive plan is final
+        [scope] = collected
+        assert len(scope.collect()) == 16
+        plan = scope._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan
+        assert "BroadcastExchange" not in plan, plan
+
+        # the restricted target lists only the rewrite set's partitions
+        [affected] = restricted
+        listed = {re.search(r"/p=(\d+)/", f).group(1) for f in affected.inputFiles()}
+        assert listed == {str(p) for p in range(16)}, listed
+
+        # end-to-end: the full merge at this key count stays correct
         out = spark.table(tgt)
         assert out.count() == 220_000
         assert out.filter(F.col("val") == "new").count() == 120_000
         assert out.filter((F.col("id") == 150_000) & (F.col("val") == "new")).count() == 1
+        assert out.filter(F.col("p") >= 16).count() == 20_000
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -122,3 +122,21 @@ def test_every_global_window_is_bounded():
         "tools/global_window_audit.py GLOBAL_WINDOW_NOTES with a real "
         f"domain bound): {unexplained}"
     )
+
+
+def test_engine_core_never_calls_list_columns():
+    """``spark.catalog.listColumns`` starts Spark jobs (2 per call, ~0.2 s
+    warm) where the session-catalog lookup in ``incremental/merge.py``
+    starts none; the engine core reads table metadata through that
+    lookup only."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "dbt_incremental_ci_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for sub in ("incremental", "ci", "plans")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "listColumns" in line
+    ]
+    assert offenders == [], offenders

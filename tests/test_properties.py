@@ -9,14 +9,14 @@ surfaces where delete+insert vs MERGE semantics can diverge
 
 from datetime import date, timedelta
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from dbt_incremental_ci_spark.incremental.merge import incremental_upsert
 
 ROW = st.tuples(
     st.integers(min_value=1, max_value=12),         # unique key (forced overlaps)
     st.integers(min_value=0, max_value=30),         # day offset (watermark col)
-    st.integers(min_value=0, max_value=2),          # partition: an overlapping key may move
+    st.one_of(st.none(), st.integers(0, 2)),        # partition (NULL too): a key may move
     st.text(alphabet="abcde", min_size=1, max_size=3),
 )
 
@@ -31,6 +31,13 @@ def _batch(min_size):
     b2=_batch(0),
     partition_by=st.sampled_from([None, ["p"]]),
 )
+# a merge into the NULL (Hive default) partition keeps the rows there
+@example(
+    b1=[(1, 0, None, "a"), (2, 0, None, "b"), (3, 0, 0, "c")],
+    b2=[(4, 1, None, "d")],
+    partition_by=["p"],
+)
+@example(b1=[(1, 0, 1, "a")], b2=[], partition_by=["p"])  # empty rewrite set
 def test_incremental_merge_equals_full_build(spark, b1, b2, partition_by):
     spark.sql("CREATE DATABASE IF NOT EXISTS t_prop")
     base = date(2024, 1, 1)
@@ -50,11 +57,10 @@ def test_incremental_merge_equals_full_build(spark, b1, b2, partition_by):
     final = list(({r[0]: r for r in b1} | {r[0]: r for r in b2}).values())
 
     spark.sql("DROP TABLE IF EXISTS t_prop.inc")
-    for batch in (b1, b2):
-        if batch:
-            incremental_upsert(
-                spark, "t_prop.inc", mk(batch), unique_key="id", partition_by=partition_by
-            )
+    for batch in (b1, b2):  # an empty second batch merges too
+        incremental_upsert(
+            spark, "t_prop.inc", mk(batch), unique_key="id", partition_by=partition_by
+        )
 
     spark.sql("DROP TABLE IF EXISTS t_prop.full")
     incremental_upsert(
