@@ -151,7 +151,7 @@ def incremental_upsert(
     # The target restricted to the rewrite set by one IN over literal
     # structs: null-safe (struct equality matches NULL fields, so the
     # default partition is kept), prunable (partition columns only) and
-    # planned as one INSET however large the scope.
+    # one expression node however large the scope (an INSET past 10 rows).
     types = {f.name: f.dataType.simpleString() for f in target.schema.fields}
     fields = ", ".join(f"'{c}', `{c}`" for c in part_cols)
     structs = ", ".join(
